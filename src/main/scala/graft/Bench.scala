@@ -86,9 +86,9 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // scheduler mode for the concurrent pass, env-overridable for a/b
-      // runs (serial timings are one job at a time and unaffected)
-      .config("spark.scheduler.mode", sys.env.getOrElse("SPARK_GRAFT_SCHED", "FIFO"))
+      // FIFO for the concurrent pass: two full bench pairs under FAIR
+      // measured no better (OPTIMIZATION_r21.md)
+      .config("spark.scheduler.mode", "FIFO")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -182,44 +182,17 @@ object Bench {
     pool.shutdown()
 
     extNames.foreach(runOne)                     // extensions: warm + time
-    // The dedup-cluster queries consume TWO shared suite-level inputs —
-    // the memoized MinHash pair table (Tables.documentNearDupPairs; q72 +
-    // q102 + the CC consumers) and the resolved component table on top of
-    // it (Tables.documentNearDupComponents; q57/q85/q102/q106/q109).
-    // Timing each consumer cold would multi-count the shared builds, so
-    // each build is timed as its own `shared_*` entry (best of 2 full
-    // rebuilds) — BEFORE any consumer is timed — and the consumers are
-    // timed against the warm
-    // memos — exactly the cost profile of a real suite session. (Round 10
-    // had q102 misclassified as cold: its clearCache reps rebuilt the
-    // whole pair table, reporting 5.89 s for a 0.37 s query.) Everything
-    // else keeps the best-of-2 cold-pass methodology (clearCache before
-    // each rep so a query never reads a prior pass's persisted dedup
-    // results; a single timed pass is too exposed to this sandbox's
+    // Queries that consume a shared suite-level input (Tables.shared)
+    // would multi-count its build if timed cold, so each build is timed
+    // as its own leg — BEFORE any consumer — and the consumers are timed
+    // against the warm memos, exactly the cost profile of a real suite
+    // session. Everything else keeps the best-of-2 cold-pass methodology
+    // (clearCache before each rep so a query never reads a prior pass's
+    // persisted results; a single timed pass is too exposed to
     // background-load spikes — observed 10x outliers on the heaviest
     // query).
-    val memoConsumers = Set(
-      "q57_dedup_clusters", "q72_dedup_clusters_stars", "q85_cluster_audit",
-      "q102_source_dup_matrix", "q106_keep_one_census", "q109_keep_best",
-      // the validity family shares the memoized trained-centroid table
-      // (Tables.embeddingCentroids8) — cold-timing each would multi-count
-      // the two Lloyd passes, the exact q102 misclassification replayed
-      "q165_silhouette", "q168_adjusted_rand", "q169_nmi",
-      // the q135 classifier family shares the memoized trained weights
-      // (PipelineQueries.sharedClassifierWeights, r20) — cold-timing each
-      // would multi-count the identical 4-iteration training seven times
-      "q135_classifier_train", "q138_pr_curve", "q143_calibration",
-      "q154_roc_auc", "q178_isotonic_calibration", "q181_quantile_transform",
-      "q186_quantile_binned",
-      // r21 shared inputs (VERDICT r20 items 2-3), same protocol: the
-      // dims=32 hashed feature table (Tables.hashedFeaturePairs32;
-      // q141 + q147), the bigram-LM CE scores (Tables.bigramCeScores;
-      // q117 + q137), and the 8-merge BPE training
-      // (PipelineQueries.sharedBpeMerges8; q126 + q127)
-      "q141_hashed_classifier", "q147_trained_langid",
-      "q117_bigram_lm_ce", "q137_ccnet_buckets",
-      "q126_bpe_train", "q127_bpe_apply")
-    val extCold = extNames.filterNot(memoConsumers).map { n =>
+    val warmConsumers = Tables.shared.flatMap(_.consumers).toSet
+    val extCold = extNames.filterNot(warmConsumers).map { n =>
       // canary BOTH sides of the reps: load arriving mid-leg (after a
       // leading-only sample) produced an unflagged phantom drift
       sampleCanary(n)
@@ -235,60 +208,31 @@ object Bench {
     // and reported 118 s for a ~1.3 s build). Each rep rebuilds from
     // scratch — clearPairCache drops the memo handles so the builds
     // actually run — and the LAST rep leaves the memos warm for the
-    // consumer timings below, exactly as before.
-    val sharedLegNames = Seq("shared_pair_table", "shared_component_table",
-      "shared_centroid_table", "shared_classifier_weights",
-      "shared_hashed_fp32", "shared_bigram_ce", "shared_bpe_merges")
+    // consumer timings below. Canary samples are recorded under the
+    // emitted leg names so a flag matches the drift/slow entries it
+    // de-noises.
+    val sharedLegs = Tables.shared.map(_.leg)
     val sharedReps: Seq[Seq[Double]] = (1 to 2).map { _ =>
-      // record under the EMITTED leg names so a flag matches the
-      // drift/slow entries it de-noises (review r18: "shared_tables"
-      // matched nothing)
-      sharedLegNames.foreach(sampleCanary)
+      sharedLegs.foreach(sampleCanary)
       spark.sharedState.cacheManager.clearCache()
       Tables.clearPairCache()
-      val marks = Seq.newBuilder[Long]
-      marks += System.nanoTime()
-      Tables(spark, sfDir).documentNearDupPairs // persists + materializes
-      marks += System.nanoTime()
-      Tables(spark, sfDir).documentNearDupComponents // one CC run, persisted
-      marks += System.nanoTime()
-      Tables(spark, sfDir).embeddingCentroids8 // two Lloyd passes, persisted
-      marks += System.nanoTime()
-      PipelineQueries.sharedClassifierWeights(Tables(spark, sfDir)) // 4 GD passes (r20)
-      marks += System.nanoTime()
-      Tables(spark, sfDir).hashedFeaturePairs32 // one explode+agg, persisted (r21)
-      marks += System.nanoTime()
-      Tables(spark, sfDir).bigramCeScores // trained-LM scoring chain, persisted (r21)
-      marks += System.nanoTime()
-      PipelineQueries.sharedBpeMerges8(Tables(spark, sfDir)) // batched BPE rounds (r21)
-      marks += System.nanoTime()
-      val ts = marks.result()
-      val r = ts.sliding(2).map { case Seq(a, b) => (b - a) / 1e9 }.toSeq
-      sharedLegNames.foreach(sampleCanary)
+      val t = Tables(spark, sfDir)
+      val r = Tables.shared.map { s =>
+        val t0 = System.nanoTime()
+        s.build(t)
+        (System.nanoTime() - t0) / 1e9
+      }
+      sharedLegs.foreach(sampleCanary)
       r
     }
-    def sharedBest(i: Int): Double = sharedReps.map(_(i)).min
-    val tSharedPairs = sharedBest(0)
-    val tSharedComp = sharedBest(1)
-    val tSharedCents = sharedBest(2)
-    val tSharedClf = sharedBest(3)
-    val tSharedFp32 = sharedBest(4)
-    val tSharedBgCe = sharedBest(5)
-    val tSharedBpe = sharedBest(6)
-    val extWarmMemo = extNames.filter(memoConsumers).map { n =>
+    val sharedTimes = sharedLegs.zip(sharedReps.transpose.map(_.min))
+    val extWarmMemo = extNames.filter(warmConsumers).map { n =>
       sampleCanary(n)
       val best = (1 to 2).map(_ => runOne(n)).min
       sampleCanary(n)
       n -> best
     }
-    val ext = (extCold ++ extWarmMemo ++
-      Seq("shared_pair_table" -> tSharedPairs,
-          "shared_component_table" -> tSharedComp,
-          "shared_centroid_table" -> tSharedCents,
-          "shared_classifier_weights" -> tSharedClf,
-          "shared_hashed_fp32" -> tSharedFp32,
-          "shared_bigram_ce" -> tSharedBgCe,
-          "shared_bpe_merges" -> tSharedBpe)).sortBy(_._1)
+    val ext = (extCold ++ extWarmMemo ++ sharedTimes).sortBy(_._1)
 
     val qs = serial.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")

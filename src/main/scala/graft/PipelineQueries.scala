@@ -670,34 +670,26 @@ object PipelineQueries {
   }
 
   /** The TRAINED q135 classifier weights, memoized per (session, dir) —
-    * the fourth suite-level shared input (r20), following the
-    * pair-table/components/centroids discipline in [[Tables]]: SEVEN
-    * gated queries (q135, q138, q143, q154, q178, q181, q186) train the
-    * IDENTICAL 4-iteration model (same features, label, iters, lr —
-    * deterministic by the trainer's gradient-grid design), so a suite
-    * session runs the four aggregate passes once instead of seven
-    * times. Driver-resident 4-double array (the flat trainer's
-    * contract); Bench times the build as its own `shared_classifier_
-    * weights` entry and times the consumers against the warm memo;
-    * [[Tables.clearPairCache]] drops it for cold reps. */
+    * a shared input declared in [[Tables.shared]]: SEVEN gated queries
+    * (q135, q138, q143, q154, q178, q181, q186) train the IDENTICAL
+    * 4-iteration model (same features, label, iters, lr — deterministic
+    * by the trainer's gradient-grid design), so a suite session runs the
+    * four aggregate passes once instead of seven times. Driver-resident
+    * 4-double array (the flat trainer's contract). */
   def sharedClassifierWeights(t: Tables): Array[Double] =
-    Tables.memoScalar(t.spark, t.dir, "clf_w4") { () =>
+    Tables.memo(t.spark, t.dir, "clf_w4") { () =>
       val (feats, y) = classifierFeatures
       TextAnalysis.logisticTrain(t.documents, feats, y, iters = 4, lr = 0.5)
     }
 
   /** The 8-merge BPE training, memoized per (session, dir) — a shared
-    * suite-level input (r21, VERDICT r20 item 3): q126 (the training
-    * gate) and q127 (merge-order inference) run the IDENTICAL
+    * input declared in [[Tables.shared]]: q126 (the training gate) and
+    * q127 (merge-order inference) run the IDENTICAL
     * `learnMergesBatched(documents, text, 8)` — deterministic by the
     * trainer's total argmax order (count DESC, pair ASC) — so a suite
-    * session runs the batched rounds once instead of twice. Same
-    * protocol as [[sharedClassifierWeights]]: driver-resident merge
-    * list, Bench times the build as its own `shared_bpe_merges` entry
-    * and both consumers warm; [[Tables.clearPairCache]] drops it for
-    * cold reps. */
+    * session runs the batched rounds once instead of twice. */
   def sharedBpeMerges8(t: Tables): Seq[graft.operators.BpeTrain.Merge] =
-    Tables.memoScalar(t.spark, t.dir, "bpe_merges8") { () =>
+    Tables.memo(t.spark, t.dir, "bpe_merges8") { () =>
       graft.operators.BpeTrain.learnMergesBatched(t.documents, col("text"), 8)
     }
 

@@ -132,11 +132,6 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("docs/PLANS.txt")
-    // plan-inspection mode: sortedLarge's eager localCheckpoint would
-    // EXECUTE each O(N)-sorted query during the dump and truncate its
-    // plan to an RDD scan, hiding exactly the upstream operators this
-    // file exists to exhibit — dump the plain lazy form instead
-    sys.props("spark.graft.sortMode") = "plain"
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

@@ -32,46 +32,17 @@ object Queries {
   private def sortedSmall(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(1).sortWithinPartitions(cols: _*)
 
-  /** Presentation sort for results that grow O(input): a range sort over
-    * the MATERIALIZED result. At toy scale this costs one extra job; at
-    * 30x fixture scale the range split alone is already 3x faster than
-    * the single-partition sort (measured: q22 16.7s -> 5.7s at 18M input
-    * rows), and at 100 TB it is the only viable plan. The rule: bounded
-    * outputs (rasters, fixed group sets) -> sortedSmall; O(N) outputs ->
-    * sortedLarge.
-    *
-    * Why materialize-then-sort instead of a bare `orderBy`: the range
-    * exchange's sampling job executes the sort's CHILD plan, then the
-    * shuffle-write executes it AGAIN — a bare global sort runs its whole
-    * upstream twice (scan, shuffles, windows and all). Materializing the
-    * result first means the upstream runs once and both the sampler and
-    * the sort read the stored rows — the manual form of the materialized
-    * query stage AQE inserts in production, kept explicit here so the
-    * plan is double-execution-free in any session mode.
-    *
-    * `localCheckpoint`, NOT `persist`: a persist registers the logical
-    * plan with the session CacheManager, and every LATER invocation that
-    * builds the same plan silently reads the first invocation's cached
-    * result — a benchmark rep would measure a cache scan, not the query
-    * (caught by the r17 self-review; the RDD-level checkpoint is
-    * per-invocation by construction, so repeated executions each pay
-    * their own upstream exactly once). Storage is bounded by the result
-    * a presentation sort must shuffle anyway, spilled via the block
-    * manager, and freed by the ContextCleaner when the frame goes out of
-    * scope; on a multi-executor cluster localCheckpoint trades executor-
-    * loss recoverability for speed — acceptable for a terminal
-    * presentation sort whose driver would simply rerun the query. */
+  /** Presentation sort for results that grow O(input): a lazy range
+    * sort. At 30x fixture scale the range split is already 3x faster
+    * than the single-partition sort (measured: q22 16.7s -> 5.7s at 18M
+    * input rows), and at 100 TB it is the only viable plan. The rule:
+    * bounded outputs (rasters, fixed group sets) -> sortedSmall; O(N)
+    * outputs -> sortedLarge. The range exchange's sampling job runs the
+    * upstream once more (AQE's materialized query stage removes that in
+    * production); an eager materialize-first form ran no faster on the
+    * declared suite and executed jobs at construction time. */
   private def sortedLarge(df: DataFrame, cols: Column*): DataFrame =
-    // "plain" = bare range sort, no checkpoint: the A/B escape hatch for
-    // harness sweeps AND the plan-inspection mode (an eager localCheckpoint
-    // executes the upstream at CONSTRUCTION time and truncates the dumped
-    // plan to an RDD scan — PlanDump sets the property so plans stay lazy
-    // and show the full upstream, ADVICE r17). The system property is the
-    // in-JVM override; the env var serves forked harness runs.
-    if (sys.props.get("spark.graft.sortMode")
-        .orElse(sys.env.get("SPARK_GRAFT_SORT_MODE")).contains("plain"))
-      df.orderBy(cols: _*)
-    else df.localCheckpoint(eager = true).orderBy(cols: _*)
+    df.orderBy(cols: _*)
 
   // ── §2.2 projections / scalar expressions ─────────────────────────────
 

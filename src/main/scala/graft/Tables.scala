@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.{CacheDiscipline, Dedup, Similarity, TextAnalysis}
 
 /** Table catalog over one testdata scale-factor directory.
   *
@@ -48,7 +51,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   lazy val events: DataFrame = Tables.eventsView(spark, dir)
 
   /** The MinHash+LSH near-dup pair table over `documents` at the default
-    * parameters, memoized per (session, dir): q57, q72 and q85 all
+    * parameters, memoized per (session, dir): q72, q85 and q102 all
     * consume the IDENTICAL pair set, so a suite session computes the
     * signature+band pipeline once instead of three times (the round-7
     * plan audit measured ~2 s of pure recompute at sf0.1). The result is
@@ -56,155 +59,150 @@ final case class Tables(spark: SparkSession, dir: String) {
     * that handle — consumers must NOT run it through `withPairs` (the
     * unpersist would silently de-cache it for the next query). Bounded:
     * one small-by-LSH-design pair table per scale dir. Long-lived
-    * sessions that are done with dedup call [[Tables.clearPairCache]].
-    *
-    * Resilient to `catalog.clearCache()` (Bench's cold-timing sweeps):
-    * a handle whose persist was cleared externally is discarded and the
-    * table recomputed+re-persisted, so consumers can never silently run
-    * against an unpersisted multi-consumer plan. */
+    * sessions that are done with dedup call [[Tables.clearPairCache]]. */
   def documentNearDupPairs: DataFrame =
     Tables.memo(spark, dir, "pairs") { () =>
-      graft.operators.Dedup.minHashNearDups(documents, col("doc_id"), col("text"))
+      CacheDiscipline.stored(
+        Dedup.minHashNearDups(documents, col("doc_id"), col("text")))
     }
 
   /** The RESOLVED component table `(id, rep)` over
-    * [[documentNearDupPairs]], memoized with the same (session, dir)
-    * keying and storage-level resilience: q57, q85, q106 and q109 all
-    * consume the identical clustering, so a suite session runs the
-    * iterative connectedComponents ONCE instead of four times (the
-    * round-8 bench measured ~4.5 s of pure CC recompute at sf0.1).
+    * [[documentNearDupPairs]]: q57, q85, q106 and q109 all consume the
+    * identical clustering, so a suite session runs the iterative
+    * connectedComponents ONCE instead of four times (the round-8 bench
+    * measured ~4.5 s of pure CC recompute at sf0.1).
     * `connectedComponents` materializes its result through per-round
     * `localCheckpoint`s, but that storage is invisible to
     * `DataFrame.storageLevel` (cacheManager-based), so the memo persists
-    * an explicit handle on top and counts it (eager) — the resilience
-    * check then works exactly as for the pair table. q72 deliberately
-    * stays OFF this memo: its point is re-resolving the same pair table
-    * through the independent large-star/small-star algorithm. */
+    * an explicit handle on top. q72 deliberately stays OFF this memo:
+    * its point is re-resolving the same pair table through the
+    * independent large-star/small-star algorithm. */
   def documentNearDupComponents: DataFrame =
     Tables.memo(spark, dir, "components") { () =>
-      val comp = graft.operators.Dedup.connectedComponents(documentNearDupPairs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      comp.count() // materialize: every consumer must hit warm storage
-      comp
+      CacheDiscipline.stored(Dedup.connectedComponents(documentNearDupPairs))
     }
 
-  /** Shared TRAINED CENTROIDS (k = 8, 2 Lloyd rounds over the embeddings)
-    * — the third suite-level memoized input: q165 (silhouette), q168
-    * (ARI) and q169 (NMI) all audit the IDENTICAL trained clustering, so
-    * a suite session runs the two broadcast-assignment Lloyd passes once
-    * instead of three times (each pass is a corpus scan + a driver
-    * k-row collect — the r16 bench sweep measured ~2 s of pure recompute
-    * per consumer at sf0.1). q142 deliberately stays OFF the memo (it IS
-    * the gate for the training computation) and so does q160 (it gates
-    * the k-means‖-seeded composition, a different trajectory). The
-    * trained table is k local rows; the persist handle exists so the
-    * memo's storage-level resilience check works unchanged. */
+  /** Shared TRAINED CENTROIDS (k = 8, 2 Lloyd rounds over the embeddings):
+    * q165 (silhouette), q168 (ARI) and q169 (NMI) all audit the IDENTICAL
+    * trained clustering, so a suite session runs the two
+    * broadcast-assignment Lloyd passes once instead of three times (the
+    * r16 bench sweep measured ~2 s of pure recompute per consumer at
+    * sf0.1). q142 deliberately stays OFF the memo (it IS the gate for the
+    * training computation) and so does q160 (it gates the
+    * k-means‖-seeded composition, a different trajectory). */
   def embeddingCentroids8: DataFrame =
     Tables.memo(spark, dir, "centroids8") { () =>
-      val c = graft.operators.Similarity.trainCentroids(
-          embeddings.select(col("vec_id"),
-            col("embedding").cast("array<double>").as("e")),
-          k = 8, iters = 2, dim = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
+      CacheDiscipline.stored(Similarity.trainCentroids(
+        embeddings.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("e")),
+        k = 8, iters = 2, dim = 64))
     }
 
   /** Shared HASHED FEATURE-PAIR table at dims = 32
     * ([[graft.operators.TextAnalysis.hashedFeaturePairs]] over the full
-    * corpus) — the fifth suite-level memoized input (r21, the r20
-    * deferred item 1b): q141 (training AND its `doc_id % 20 == 7`
-    * scoring slice — per-id rows, so the slice is a plain filter of
-    * this table) and q147 (all five one-vs-rest langid models)
-    * featurize the IDENTICAL corpus at the identical dims, so a suite
-    * session pays the tokenize+hash explode once instead of three
-    * times. Same (session, dir) keying and clearCache resilience as
-    * the pair-table memo; Bench times the build as its own
-    * `shared_hashed_fp32` entry and times both consumers warm. */
+    * corpus): q141 (training AND its `doc_id % 20 == 7` scoring slice —
+    * per-id rows, so the slice is a plain filter of this table) and q147
+    * (all five one-vs-rest langid models) featurize the IDENTICAL corpus
+    * at the identical dims, so a suite session pays the tokenize+hash
+    * explode once instead of three times. */
   def hashedFeaturePairs32: DataFrame =
     Tables.memo(spark, dir, "fp32") { () =>
-      val fp = graft.operators.TextAnalysis.hashedFeaturePairs(
-          documents, col("doc_id"), col("text"), dims = 32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fp.count()
-      fp
+      CacheDiscipline.stored(TextAnalysis.hashedFeaturePairs(
+        documents, col("doc_id"), col("text"), dims = 32))
     }
 
   /** Shared BIGRAM-LM CROSS-ENTROPY scores
     * ([[graft.operators.TextAnalysis.bigramCrossEntropy]] over the full
-    * corpus, target = `lang = 'en'`) — the sixth suite-level memoized
-    * input (r21, the r20 deferred item 1b): q117 (the score gate) and
-    * q137 (the CCNet bucketing downstream) consume the IDENTICAL
-    * trained-LM scoring chain — two corpus explodes + two vocab
-    * aggregates + the scoring joins — so a suite session runs it once
-    * instead of twice. Bounded: one (id, n_bigrams, ce) row per doc.
-    * Bench entry: `shared_bigram_ce`. */
+    * corpus, target = `lang = 'en'`): q117 (the score gate) and q137 (the
+    * CCNet bucketing downstream) consume the IDENTICAL trained-LM scoring
+    * chain — two corpus explodes + two vocab aggregates + the scoring
+    * joins — so a suite session runs it once instead of twice. Bounded:
+    * one (id, n_bigrams, ce) row per doc. */
   def bigramCeScores: DataFrame =
     Tables.memo(spark, dir, "bigramCe") { () =>
-      val s = graft.operators.TextAnalysis.bigramCrossEntropy(
-          documents, col("doc_id"), col("text"),
-          isTarget = col("lang") === "en")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.count()
-      s
+      CacheDiscipline.stored(TextAnalysis.bigramCrossEntropy(
+        documents, col("doc_id"), col("text"),
+        isTarget = col("lang") === "en"))
     }
 }
 
 object Tables {
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  /** Shared (session, dir, kind)-keyed memo for suite-level derived
-    * tables. Resilient to `catalog.clearCache()` (a handle whose persist
-    * was cleared externally is discarded and rebuilt), and self-evicting:
-    * entries belonging to a STOPPED SparkSession are purged on every
-    * call, so a long-lived JVM that churns sessions (test suites) cannot
-    * leak stopped sessions' DataFrames through this map. */
-  private def memo(spark: SparkSession, dir: String, kind: String)(
-      build: () => DataFrame): DataFrame = pairCache.synchronized {
+  /** One shared suite-level input: the leg name Bench times its build
+    * under, the gated queries that consume it, and the build itself. */
+  final case class Shared(leg: String, consumers: Set[String], build: Tables => Any)
+
+  /** Every shared input, in dependency order (the component table reads
+    * the pair table). Bench times each build as its own leg, BEFORE any
+    * consumer, and times the consumers against the warm memos — timing a
+    * consumer cold would charge it the whole shared build (r10 reported
+    * q102 at 5.89 s for a 0.37 s query that way). A new memo that is not
+    * listed here is mis-timed. */
+  val shared: Seq[Shared] = Seq(
+    Shared("shared_pair_table",
+      Set("q72_dedup_clusters_stars", "q85_cluster_audit", "q102_source_dup_matrix"),
+      _.documentNearDupPairs),
+    Shared("shared_component_table",
+      Set("q57_dedup_clusters", "q85_cluster_audit", "q106_keep_one_census",
+        "q109_keep_best"),
+      _.documentNearDupComponents),
+    Shared("shared_centroid_table",
+      Set("q165_silhouette", "q168_adjusted_rand", "q169_nmi"),
+      _.embeddingCentroids8),
+    Shared("shared_classifier_weights",
+      Set("q135_classifier_train", "q138_pr_curve", "q143_calibration",
+        "q154_roc_auc", "q178_isotonic_calibration", "q181_quantile_transform",
+        "q186_quantile_binned"),
+      PipelineQueries.sharedClassifierWeights),
+    Shared("shared_hashed_fp32",
+      Set("q141_hashed_classifier", "q147_trained_langid"),
+      _.hashedFeaturePairs32),
+    Shared("shared_bigram_ce",
+      Set("q117_bigram_lm_ce", "q137_ccnet_buckets"),
+      _.bigramCeScores),
+    Shared("shared_bpe_merges",
+      Set("q126_bpe_train", "q127_bpe_apply"),
+      PipelineQueries.sharedBpeMerges8))
+
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
+
+  /** Shared (session, dir, kind)-keyed memo for the suite-level inputs in
+    * [[shared]]: persisted DataFrames and small driver-side values (the
+    * q135-family classifier weights, the BPE merge list). A DataFrame
+    * whose persist was cleared externally (`catalog.clearCache()`) is
+    * discarded and rebuilt, so consumers can never silently run against
+    * an unpersisted multi-consumer plan. Self-evicting: entries belonging
+    * to a STOPPED SparkSession are purged on every call, so a long-lived
+    * JVM that churns sessions (test suites) cannot leak stopped sessions'
+    * values through this map. */
+  private[graft] def memo[T <: AnyRef](spark: SparkSession, dir: String, kind: String)(
+      build: () => T): T = memos.synchronized {
     // NOT ConcurrentHashMap.compute: the components build re-enters this
     // memo for its pair-table input, and compute() is non-reentrant
     // (recursive-update). A monitor is reentrant, and still gives the
     // build-once-per-key guarantee across threads.
-    pairCache.keySet.forEach { k =>
-      if (k._1.sparkContext.isStopped) { pairCache.remove(k); () }
+    memos.keySet.forEach { k =>
+      if (k._1.sparkContext.isStopped) { memos.remove(k); () }
     }
     val key = (spark, dir, kind)
-    val existing = pairCache.get(key)
-    if (existing != null &&
-        existing.storageLevel != org.apache.spark.storage.StorageLevel.NONE) existing
-    else { val built = build(); pairCache.put(key, built); built }
-  }
-
-  /** Driver-side twin of [[memo]] for SMALL shared results that live as
-    * plain Scala values (r20: the q135-family classifier weights — a
-    * 4-double array seven gated queries train identically; see
-    * [[graft.PipelineQueries.sharedClassifierWeights]]). Same
-    * (session, dir, kind) keying and stopped-session eviction; no
-    * storage-level resilience is needed because nothing Spark-managed
-    * backs the value. Cleared by [[clearPairCache]] so cold-timing
-    * harness reps rebuild it exactly like the DataFrame memos. */
-  private val scalarCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-
-  def memoScalar[T <: AnyRef](spark: SparkSession, dir: String, kind: String)(
-      build: () => T): T = scalarCache.synchronized {
-    scalarCache.keySet.forEach { k =>
-      if (k._1.sparkContext.isStopped) { scalarCache.remove(k); () }
+    def rebuild(): T = { val built = build(); memos.put(key, built); built }
+    memos.get(key) match {
+      case null => rebuild()
+      case ds: Dataset[_] if ds.storageLevel == StorageLevel.NONE => rebuild()
+      case v => v.asInstanceOf[T]
     }
-    val key = (spark, dir, kind)
-    val existing = scalarCache.get(key)
-    if (existing != null) existing.asInstanceOf[T]
-    else { val built = build(); scalarCache.put(key, built); built }
   }
 
-  /** Release every cached derived table (see
-    * [[Tables.documentNearDupPairs]] / [[Tables.documentNearDupComponents]])
-    * and every [[memoScalar]] value. */
-  def clearPairCache(): Unit = {
-    pairCache.values.forEach(df => { df.unpersist(blocking = false); () })
-    pairCache.clear()
-    scalarCache.clear()
+  /** Release every memoized input (see [[shared]]): DataFrames are
+    * unpersisted, driver-side values dropped, so the next access
+    * rebuilds. */
+  def clearPairCache(): Unit = memos.synchronized {
+    memos.values.forEach {
+      case ds: Dataset[_] => ds.unpersist(blocking = false); ()
+      case _ => ()
+    }
+    memos.clear()
   }
 
   /** Per-directory memo of the probed `events.ts` physical layout (true =

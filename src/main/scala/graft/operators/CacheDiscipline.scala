@@ -17,24 +17,40 @@ import org.apache.spark.storage.StorageLevel
   * one count (the single execution that fills every intermediate cache
   * and drains it into the result), then unpersist the intermediates
   * immediately. After the operator returns, the only cache entry left
-  * is the result the caller is about to consume — bounded by the
-  * operator's OUTPUT (runs, top-k, vocab pairs, gated rows), never by
-  * the exploded working set. CacheLifecycleSpec pins the contract:
-  * collecting any touched query leaves at most its result entries in
+  * is the result the caller is about to consume — output-sized (runs,
+  * top-k, vocab pairs, gated rows), never the exploded working set; an
+  * operator whose output is itself corpus-scale (a quantile gate, a
+  * per-doc bucketing) still leaves a corpus-scale result for the caller
+  * to release in a long-lived session. Only caches the operator created
+  * are released: a frame the caller already persisted stays cached
+  * ([[persistOwned]]). CacheLifecycleSpec pins the contract: collecting
+  * any touched query leaves at most its result entries in
   * `spark.sharedState.cacheManager`, never a Generate-bearing
   * intermediate. */
-private[operators] object CacheDiscipline {
-  /** Measured cost of the discipline (OptLab `ablife`, interleaved
-    * same-session A/B at sf0.1, best-of-4): 26–88 ms per affected leg
-    * (~3–11%) — one extra action + the result cache write — against
-    * unbounded cache residency without it. The `graft.ab.leak` sys-prop
-    * (dev-only, read per call so the probe can alternate in-session)
-    * restores the r20 leak behavior for exactly that A/B. */
+private[graft] object CacheDiscipline {
+  /** Measured cost of the discipline (interleaved same-session A/B at
+    * sf0.1, best-of-4): 26–88 ms per affected leg (~3–11%) — one extra
+    * action + the result cache write — against unbounded cache
+    * residency without it. */
   def materialized(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    if (sys.props.get("graft.ab.leak").contains("1")) return result // A/B probe
     val out = result.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
     intermediates.foreach(_.unpersist(blocking = false))
+    out
+  }
+
+  /** `df` persisted (MEMORY_AND_DISK), or `df` untouched when something
+    * already caches it; the flag says whether this call created the
+    * cache — only then may the caller release it. */
+  def persistOwned(df: DataFrame): (DataFrame, Boolean) =
+    if (df.storageLevel != StorageLevel.NONE) (df, false)
+    else (df.persist(StorageLevel.MEMORY_AND_DISK), true)
+
+  /** [[persistOwned]], forced with one count when the cache is new, so
+    * every consumer reads warm storage. */
+  def stored(df: DataFrame): DataFrame = {
+    val (out, owned) = persistOwned(df)
+    if (owned) out.count()
     out
   }
 }

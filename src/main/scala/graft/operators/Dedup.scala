@@ -534,7 +534,10 @@ object Dedup {
   /** The unmaterialized pair plan of [[ngramContainmentCapped]] —
     * package-private so PlanShapeSpec can gate the anti-join candidate
     * guard before [[materialized]] hides the dataflow behind an
-    * InMemoryRelation. */
+    * InMemoryRelation. Not side-effect free: building the plan runs ONE
+    * eager Spark job (the over-cap stop-shingle count) and bakes the
+    * stop/no-stop branch into the returned plan, which is valid only
+    * while `shingles` is unchanged. */
   private[graft] def containmentCappedPairs(
       shingles: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
     // the stop set is the Zipf HEAD — at most totalRows/dfCap distinct
@@ -924,8 +927,8 @@ object Dedup {
       // NOTE (r21, measured NEGATIVE — do not re-attempt): batching TWO
       // large/small alternations per materialization (the langid/BPE
       // §2.6 pattern, to halve the ~30 dispatch-floor jobs this loop
-      // costs at sf0.1) ran 8× SLOWER (OptLab q72ab interleaved:
-      // apr1 1.30 s vs apr2 10.15 s best-of-5): each star consumes its
+      // costs at sf0.1) ran 8× SLOWER (q72, interleaved A/B: one
+      // alternation 1.30 s vs two 10.15 s best-of-5): each star consumes its
       // input through THREE branches (mins, the join side, the union
       // leg), so without the per-pair materialization barrier the
       // second pair re-executes the first pair's whole 6-exchange

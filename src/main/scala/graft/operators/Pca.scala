@@ -75,8 +75,8 @@ object Pca {
     *
     * Shuffle shape: ONE group-less aggregate with fixed state
     * (1 + dim + dim·(dim+1)/2 long sums — 1.2 KB at dim 16), map-side
-    * combined; the triangle unfolds from the single result row via an
-    * in-row explode. Nothing corpus-sized moves.
+    * combined; the triangle unfolds from the single result row via one
+    * in-row generator over the index pairs. Nothing corpus-sized moves.
     *
     * Overflow contract (ANSI mode throws loudly): Σxy terms are
     * ≤ (max|x|·scale)² per row; at unit-normalized embeddings and
@@ -129,14 +129,23 @@ object Pca {
     val agg = udaf(new graft.functions.CovarianceLongAggregator(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
     val st = snapped.agg(agg(col("xs")).as("state"))
-    def cell(idx: Int): Column = element_at(col("state"), idx + 1)
-    val triangle = array((for { i <- 0 until dim; j <- i until dim } yield
-      struct(lit(i.toLong).as("i"), lit(j.toLong).as("j"),
-        cell(1 + i).as("sx"), cell(1 + j).as("sy"),
-        cell(graft.functions.CovarianceAggregator.triIndex(i, j, dim)).as("sxy"))): _*)
-    st.select(cell(0).as("n"), explode(triangle).as("t"))
-      .select(col("t.i").as("i"), col("t.j").as("j"), col("n"),
-        col("t.sx").as("sx"), col("t.sy").as("sy"), col("t.sxy").as("sxy"))
+    // state index (0-based) -> element_at position (1-based, int)
+    def cell(idx: Column): Column = element_at(col("state"), (idx + 1).cast("int"))
+    // The upper triangle as ONE generator over (i, j) index pairs — a
+    // plan of constant size in dim (a literal array of dim·(dim+1)/2
+    // structs OOMed Janino at dim 64, the q158 plan-size class). Pairs
+    // come out in (i, j) lexicographic order, which is exactly the
+    // aggregator's Σxy layout: the pair at position `pos` reads state
+    // cell 1 + dim + pos (CovarianceAggregator.triIndex).
+    val last = lit(dim - 1L)
+    val pairs = flatten(transform(sequence(lit(0L), last), i =>
+      transform(sequence(i, last), j => struct(i.as("i"), j.as("j")))))
+    val indexed = transform(pairs, (p, pos) =>
+      struct(p.getField("i").as("i"), p.getField("j").as("j"), pos.as("pos")))
+    st.select(col("state"), explode(indexed).as("t"))
+      .select(col("t.i").as("i"), col("t.j").as("j"), cell(lit(0)).as("n"),
+        cell(col("t.i") + 1).as("sx"), cell(col("t.j") + 1).as("sy"),
+        cell(col("t.pos") + (1 + dim)).as("sxy"))
   }
 
   /** Top-`k` principal components: (eigenvalue DESC, orthonormal rows).

@@ -46,6 +46,20 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.canaryFlags(Seq("x" -> 0.0601), base) == Seq("x"))
   }
 
+  test("shared-input registry: the seven emitted legs, 22 consumers, every one a real query") {
+    // Bench derives its shared legs and its warm/cold split from
+    // Tables.shared alone; the leg names are parsed from the bench JSON
+    val legs = Tables.shared.map(_.leg)
+    assert(legs == Seq("shared_pair_table", "shared_component_table",
+      "shared_centroid_table", "shared_classifier_weights",
+      "shared_hashed_fp32", "shared_bigram_ce", "shared_bpe_merges"))
+    assert(legs.distinct == legs)
+    val consumers = Tables.shared.flatMap(_.consumers).toSet
+    assert(consumers.size == 22, consumers.toSeq.sorted)
+    val unknown = consumers.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"consumers that are not queries: $unknown")
+  }
+
   test("passes record: run-order [wall, canary] pairs, valid JSON shape (r20)") {
     // the driver and judge parse this field to adjudicate load-vs-plan;
     // its shape is contract — pairs stay in RUN ORDER (the correlation

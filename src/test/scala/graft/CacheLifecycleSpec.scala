@@ -53,6 +53,23 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("quantileGate and ccnetBuckets leave a caller-persisted input cached") {
+    // the operators release only caches they created: a frame the caller
+    // already persisted (a memo handle, say) must survive both calls
+    cm.clearCache()
+    val scored = docs.select(col("doc_id"), col("lang"),
+        length(col("text")).cast("double").as("s"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      Cleaning.quantileGate(scored, col("s"), 0.75).unpersist(blocking = true)
+      assert(scored.storageLevel.useMemory || scored.storageLevel.useDisk,
+        "quantileGate released a cache the caller owns")
+      Cleaning.ccnetBuckets(scored, col("lang"), col("s")).unpersist(blocking = true)
+      assert(scored.storageLevel.useMemory || scored.storageLevel.useDisk,
+        "ccnetBuckets released a cache the caller owns")
+    } finally { scored.unpersist(blocking = true); () }
+  }
+
   test("pmiCollocations releases both vocab count caches") {
     assertOnlyResultCached("pmiCollocations") {
       TextAnalysis.pmiCollocations(docs, col("text"), minCount = 3L)

@@ -5,6 +5,13 @@ package graft
   * (r19) — a gate surface with no doubles has no engine-dependent canon. */
 class CanonSpec extends SparkSpec {
 
+  /** Distance from `u` to the nearest half-grid point of 10^-k, where a
+    * scale-k round changes output. */
+  private def boundaryDistance(u: Double, k: Int): Double = {
+    val scaled = u * math.pow(10.0, k.toDouble)
+    (0.5 - math.abs(scaled - math.rint(scaled))) / math.pow(10.0, k.toDouble)
+  }
+
   test("g6 matches Python %.6g on representative values") {
     val cases = Seq(
       5.0 -> "5", 0.05 -> "0.05", 123456.7 -> "123457",
@@ -40,7 +47,7 @@ class CanonSpec extends SparkSpec {
       (1L, 1L, 2L, 5L, 5L, 13L)), s"moment fixture mismatch: $m")
     // the quotient IS a boundary value (distance 0) — the class the
     // integer encoding removes from the hash path
-    assert(RoundingMargins.boundaryDistance(1.0 / (2.0 * 1e6), 6) == 0.0)
+    assert(boundaryDistance(1.0 / (2.0 * 1e6), 6) == 0.0)
     // and the integer canon is one md5 under any merge topology
     val ref = Canon.md5(graft.operators.Pca.covarianceMomentsExact(df, dim = 2))
     for (p <- Seq("1", "3")) {
